@@ -1,8 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 object Bench {
+
+  /** Shuffle-write bytes of every task from construction on. [[quiesce]]
+    * waits for the async listener bus to drain (value stable across 100 ms
+    * polls, bounded spins) before reading: reading right after an action
+    * would race events still in flight. */
+  private final class ShuffleCounter(sc: SparkContext) {
+    private val acc = new java.util.concurrent.atomic.AtomicLong
+    sc.addSparkListener(new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null) acc.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
+      }
+    })
+    def quiesce(): Long = {
+      var last = -1L
+      var spins = 0
+      while (acc.get() != last && spins < 30) {
+        last = acc.get(); Thread.sleep(100); spins += 1
+      }
+      acc.get()
+    }
+  }
 
   /** Classification of a query's time vs the committed baseline, decided
     * by BOTH wall-clock and shuffle-write bytes (VERDICT r15 #2). Bytes
@@ -318,29 +341,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — the scale
-    // probe runs the heavy tier on local-cluster[W,C,M] (separate
-    // executor JVMs: real serialization + loopback shuffle, the half of
-    // the 100× story a saturated local[N] cannot show). Executor JVMs
-    // need this repo's classes shipped: SPARK_GRAFT_JARS=<path to
-    // `sbt package` jar>.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-    val builder1 = sys.env.get("SPARK_GRAFT_JARS")
-      .fold(builder0)(j => builder0.config("spark.jars", j))
-    val spark = sys.env.get("SPARK_GRAFT_EXEC_MEM")
-      .fold(builder1)(m => builder1.config("spark.executor.memory", m))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC pin: Tables.events reinterprets NTZ wall-clock as session-TZ
-      // instant; without this, epoch math would drift on a non-UTC host.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     /** Force FULL materialization of every output column. A bare `count()`
       * lets Catalyst prune all computed columns (a narrow transform query
@@ -361,11 +362,8 @@ object Bench {
     // SPARK_GRAFT_SHUFFLE=0 opts out (diagnostic escape hatch only).
     val recordShuffle = !sys.env.get("SPARK_GRAFT_SHUFFLE").contains("0")
     val shuffleCounter =
-      if (recordShuffle) Some(graft.tools.ProbeMetrics.shuffleWritten(spark.sparkContext))
-      else None
-    /** Snapshot the shuffle counter after waiting for the async listener
-      * bus to quiesce (shared spin in [[graft.tools.ProbeMetrics]]). */
-    def shuffleSnapshot(): Long = shuffleCounter.fold(0L)(_.quiesce(maxSpins = 30))
+      if (recordShuffle) Some(new ShuffleCounter(spark.sparkContext)) else None
+    def shuffleSnapshot(): Long = shuffleCounter.fold(0L)(_.quiesce())
     val shuffleByQuery = scala.collection.mutable.LinkedHashMap.empty[String, Long]
 
     // one untimed warmup: JVM/codegen/parquet-footer caches

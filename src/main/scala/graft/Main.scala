@@ -30,19 +30,6 @@ object Main {
   private def jdbcUser: String = sys.env.getOrElse("GRAFT_JDBC_USER", "default")
   private def jdbcPassword: String = sys.env.getOrElse("GRAFT_JDBC_PASSWORD", "")
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    functions.GraftFunctions.register(s)
-    s
-  }
-
   private def sinkFor(cfg: AppConfig, t: TenantConfig): BatchSink =
     if (jdbcMode)
       new JdbcStatementsSink(t.clickhouseUri, jdbcUser, jdbcPassword,
@@ -81,7 +68,7 @@ object Main {
 
   private def live(): Unit = {
     val cfg = AppConfig.load()
-    val spark = session()
+    val spark = Session.submitted()
     val dlqDir = sys.env.getOrElse("GRAFT_DLQ_DIR", "/tmp/graft-dlq")
     val ckptBase = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR", "/tmp/graft-ckpt")
     val runner = new TenantRunner(spark)
@@ -149,7 +136,7 @@ object Main {
     val cfg = AppConfig.load()
     val t = cfg.tenants.find(_.name == tenant)
       .getOrElse(throw new IllegalArgumentException(s"unknown tenant $tenant"))
-    val spark = session()
+    val spark = Session.submitted()
     val dlq = new Dlq(spark, sys.env.getOrElse("GRAFT_DLQ_DIR", "/tmp/graft-dlq") + s"/$tenant")
     // validated + formatted in ONE place (BackfillJob.tsBounds) — and the
     // range is now rejected BEFORE a scan over a bad range is built

@@ -11,8 +11,13 @@ package graft.analytics
   *
   * Semantics: runs every task, propagates the FIRST failure (after all
   * tasks have finished — no store is left half-written by a sibling's
-  * cancellation), preserves nothing about ordering. Callers must pass only
-  * tasks that are mutually independent AND read already-materialized (or
+  * cancellation), preserves nothing about ordering. An interrupt of the
+  * calling thread is handled the same way: `run` still waits for every
+  * running task (an interrupted `Future.get` would otherwise return while
+  * sibling store writes continue, and the caller's `IndexLock` would be
+  * released under them), then rethrows the `InterruptedException` with the
+  * thread's interrupt flag restored. Callers must pass only tasks that are
+  * mutually independent AND read already-materialized (or
   * concurrently-computable) inputs; tasks writing the same directory are
   * NOT independent. Job descriptions are thread-local in Spark, so each
   * task's jobs label correctly in the UI. */
@@ -25,12 +30,24 @@ private[graft] object Par {
         override def call(): Unit = t()
       }))
       var firstFailure: Option[Throwable] = None
+      var interrupt: Option[InterruptedException] = None
       fs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
+        var done = false
+        while (!done) {
+          try { f.get(); done = true }
+          catch {
+            case e: InterruptedException =>
+              if (interrupt.isEmpty) interrupt = Some(e)
+            case e: java.util.concurrent.ExecutionException =>
+              if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
+              done = true
+          }
         }
+      }
+      interrupt.foreach { e =>
+        firstFailure.foreach(e.addSuppressed)
+        Thread.currentThread().interrupt()
+        throw e
       }
       firstFailure.foreach(throw _)
     } finally pool.shutdown()

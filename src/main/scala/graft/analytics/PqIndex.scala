@@ -364,6 +364,17 @@ object PqIndex {
       quantized, trainOn, fullTrain, trainSampleTarget, idCol, vecCol)
     val subsetTrain = !(quantizedTrain eq quantized)
     val cent = Clustering.trainedCentroidsFromQuantized(quantizedTrain, coarseStep)
+    // a non-empty corpus that seeds no coarse centroid would write an index
+    // with no lists (its query then fails to infer a schema): refuse before
+    // anything is written. An empty corpus still builds the empty index.
+    if (cent.isEmpty && !quantized.isEmpty) {
+      if (subsetTrain) quantizedTrain.unpersist()
+      quantized.unpersist()
+      throw new IllegalArgumentException(
+        "PqIndex.build: no coarse centroid was seeded for a non-empty corpus; " +
+          "seeds are the training vectors with vec_id % coarseStep == 0 " +
+          s"(coarseStep = $coarseStep), and none has such an id")
+    }
     // the coarse-centroid store write (checkpointed k rows), the corpus
     // count (sizes the vlists sidecar width below), and the subspace-PQ
     // training are mutually independent — overlap them (r18, guide §2.6)

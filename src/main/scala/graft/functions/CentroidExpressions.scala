@@ -69,7 +69,7 @@ object CentroidTable {
         org.apache.spark.sql.functions.col(mCol),
         org.apache.spark.sql.functions.col(nmCol).cast("double"))
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+      .map(r => centroid(r, 0))
       .sortBy(_._1)
     CentroidTable(rows.map(_._1), rows.map(_._2), rows.map(_._3))
   }
@@ -83,11 +83,27 @@ object CentroidTable {
         org.apache.spark.sql.functions.col("m"),
         org.apache.spark.sql.functions.col("nm").cast("double"))
       .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3)))
+      .map(r => (r.getInt(0), centroid(r, 1)))
     rows.groupBy(_._1).map { case (sub, g) =>
-      val s = g.sortBy(_._2)
-      sub -> CentroidTable(s.map(_._2), s.map(_._3), s.map(_._4))
+      val s = g.map(_._2).sortBy(_._1)
+      sub -> CentroidTable(s.map(_._1), s.map(_._2), s.map(_._3))
     }
+  }
+
+  /** The (cid, m, nm) fields of a collected row starting at `at`. A null
+    * field, or a null element of `m`, is a degenerate centroid (a training
+    * bug upstream): fail fast and name it, where reading it blindly would
+    * throw a bare driver error (`nm`) or unbox the element to 0.0 and skew
+    * every assignment silently. */
+  private def centroid(r: org.apache.spark.sql.Row, at: Int): (Long, Array[Double], Double) = {
+    def degenerate(what: String): Nothing = throw new IllegalArgumentException(
+      s"degenerate centroid row $r: $what")
+    if (r.isNullAt(at)) degenerate("null cid")
+    if (r.isNullAt(at + 1)) degenerate("null m")
+    if (r.isNullAt(at + 2)) degenerate("null nm")
+    val m = r.getSeq[Any](at + 1)
+    if (m.contains(null)) degenerate("null element in m")
+    (r.getLong(at), m.map(_.asInstanceOf[Double]).toArray, r.getDouble(at + 2))
   }
 
   /** Spark's `round(d, 6)` double semantics exactly (RoundBase): NaN and

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only job-level profiler (guide §1.1: find where the time goes before
   * touching anything). Runs named queries once each and prints every Spark
@@ -15,14 +14,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("sim_pqindex_topk")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     final case class JobRow(id: Int, desc: String, var ms: Long = -1,
                             var shufW: Long = 0, var shufR: Long = 0,
@@ -71,7 +63,8 @@ object JobProfile {
       jobs.clear(); stageToJob.clear(); starts.clear(); order.clear()
       val wall = runOnce(name)
       // async listener bus: spin until the job table is stable (the
-      // ProbeMetrics.quiesce discipline — listenerBus is private[spark])
+      // same bounded spin as Bench's shuffle counter — listenerBus is
+      // private[spark])
       var lastDone = -1
       var spins = 0
       def doneCount = {

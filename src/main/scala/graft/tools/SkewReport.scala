@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.ChunkedWindows
@@ -27,16 +27,7 @@ object SkewReport {
     val dir = args.headOption.getOrElse("/root/repo/data/sf1")
     val hotPct = if (args.length > 1) args(1).toInt else 10
     val replicas = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     // hot key: pct% of events collapse onto user 1, deterministically
     val base = graft.Tables(spark, dir).events
@@ -49,7 +40,7 @@ object SkewReport {
       .withColumn("user_id",
         when(pmod(col("event_id"), lit(100L)) < hotPct, lit(1L))
           .otherwise(col("user_id")))
-      .repartition(cpus.toInt) // spread replicas; freeze below
+      .repartition(graft.Session.cpus.toInt) // spread replicas; freeze below
       .localCheckpoint(true) // freeze the input so both forms read identical bytes
 
     def time(name: String)(df: => DataFrame): Double = {

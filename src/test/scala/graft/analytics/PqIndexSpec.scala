@@ -41,6 +41,18 @@ class PqIndexSpec extends SparkSpec {
     assert(fromIndex == want)
   }
 
+  test("build refuses a non-empty corpus that seeds no coarse centroid") {
+    val emb = graft.Tables(spark, sf("sf0.01")).embeddings
+    // coarse seeds are vec_id % 25 == 0: this corpus has none of them
+    val unseeded = emb.filter(col("vec_id") % 25 === 1)
+    assert(!unseeded.isEmpty)
+    val e = intercept[IllegalArgumentException](
+      PqIndex.build(unseeded, Files.createTempDirectory("pqnoseed").toString))
+    assert(e.getMessage.contains("vec_id % coarseStep == 0"), e.getMessage)
+    // a truly empty corpus still builds (the empty index)
+    PqIndex.build(emb.limit(0), Files.createTempDirectory("pqempty").toString)
+  }
+
   test("append encodes under the stored quantizer: equals a one-shot build of the union trained on history") {
     graft.functions.GraftFunctions.register(spark)
     val emb = graft.Tables(spark, sf("sf0.01")).embeddings

@@ -4,9 +4,9 @@ import java.net.Socket
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends SparkSpec {
 
   test("BatchSizeManager: doubles above target, halves below, clamps (O16)") {
     val m = new BatchSizeManager(1000, 1, 10000, 5000.0)
@@ -27,8 +27,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("admission-cap probe: lands as a source option when supported, stays log-only otherwise (O16)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").getOrCreate()
     import graft.sources.Sources
     // file sources admit by files — builtin probe hit
     assert(Sources.admissionOption(spark, "parquet").contains("maxFilesPerTrigger"))
